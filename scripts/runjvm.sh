@@ -4,7 +4,7 @@
 # while sbt compiles. Snapshot first:
 #   sbt -batch package && cp target/scala-2.13/weatherdataingestiongcpspark_2.13-0.1.0.jar target/graft-snapshot.jar
 # Then:
-#   SPARK_GRAFT_SF_DIR=... SPARK_DRIVER_MEM=24g scripts/runjvm.sh graft.RunOne q01_pricing_summary
+#   SPARK_DRIVER_MEM=24g scripts/runjvm.sh graft.Probe q01_pricing_summary <sfDir> reps=2
 # The JVM flags mirror build.sbt's forked-run options (Spark 4 on JDK 17
 # needs the add-opens set when SparkSession is built outside spark-submit).
 set -euo pipefail

@@ -17,8 +17,8 @@ fi
 : > "$LOG"
 for q in "${QUERIES[@]}"; do
   echo "=== $q (mem=$MEM reps=$REPS) $(date +%T) loadavg=$(cut -d' ' -f1-3 /proc/loadavg)" | tee -a "$LOG"
-  SPARK_GRAFT_SF_DIR="$SF" SPARK_DRIVER_MEM="$MEM" SPARK_GRAFT_REPS="$REPS" \
-    /root/repo/scripts/runjvm.sh graft.RunOne "$q" 2>/dev/null \
-    | grep RUNONE | tee -a "$LOG"
+  SPARK_DRIVER_MEM="$MEM" \
+    "$(dirname "$0")/runjvm.sh" graft.Probe "$q" "$SF" reps="$REPS" 2>/dev/null \
+    | grep '^PROBE ' | tee -a "$LOG"
 done
 echo "DONE $(date +%T)" | tee -a "$LOG"

@@ -11,8 +11,8 @@ import graft.ext.Text
   * the DuckDB oracle can run at ~sf1 on the 128 GiB sandbox —
   * `runMain graft.MakeSf <srcDir> <outDir> <k>`.
   *
-  * Scaling discipline (the ScaleProbe generator's, extended to the
-  * whole star schema): copy c of each table shifts every key by
+  * Scaling discipline (SCALE-SF10's generator in PLANS.md, extended to
+  * the whole star schema): copy c of each table shifts every key by
   * c·10⁷, consistently on BOTH sides of each FK (o_custkey moves with
   * c_custkey, l_orderkey/l_partkey/l_suppkey with their dimensions),
   * so referential integrity and per-key fan-outs are preserved

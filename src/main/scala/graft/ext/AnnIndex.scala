@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * constants; specs re-call them at other settings to prove the
   * tuning knobs work on the SAME physical plan.
   *
-  * Sizing rule at scale (the x58 adjudication, measured flat in
-  * ScaleProbe): grow the cell count `kc` (and `k` for the graph)
+  * Sizing rule at scale (the x58 adjudication, measured in PLANS.md's
+  * SCALE-SF10 addenda): grow the cell count `kc` (and `k` for the graph)
   * PROPORTIONALLY to the corpus so the mean cell population stays
   * constant — candidates per query are then O(cell × nProbe)
   * regardless of corpus size, and the only growing cost is the

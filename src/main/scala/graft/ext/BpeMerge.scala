@@ -239,7 +239,8 @@ object BpeMerge {
       // checkpoint between rounds: round r's argmax is a SEPARATE
       // dataframe from round r+1's, so without materialization every
       // later round re-tokenizes and re-rewrites the training corpus
-      // from scratch inside its own subtree (round-11 RunOne finding)
+      // from scratch inside its own subtree (round-11 finding; PLANS.md
+      // SCALE-BPEDEPTH measures per-round cost flat to 80 rounds)
       if (r < rounds) cur = applyPair(cur, p, allowIdentical).localCheckpoint()
       p
     }

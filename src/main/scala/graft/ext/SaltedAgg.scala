@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * occurrence of the hot key in ONE task of the attach join, and AQE
   * cannot rescue it — OptimizeSkewedJoin only matches a bare shuffle
   * stage under each join child, so an aggregate- or window-fed build
-  * side disables the split (SkewProbe measured: no split ever fires,
+  * side disables the split (measured in OPTIMIZATION_r17.md's
+  * "SkewProbe receipts": no split ever fires,
   * and an explicit repartition of the aggregate output is optimizer-
   * removed as redundant); broadcast demotion is similarly blind (it
   * sees the pre-final-aggregate partial rows). The plain join-back is
@@ -54,8 +55,9 @@ import org.apache.spark.sql.functions._
   * The attached values are identical to the window form for any
   * associative+commutative aggregate: level-1 ∘ level-2 is a
   * regrouping of the same exact-integer fold (SaltedAggSpec pins it
-  * on a hot-key fixture and checks the plan shape; SkewProbe carries
-  * the max-task receipts).
+  * on a hot-key fixture and checks the plan shape; the max-task
+  * receipts are OPTIMIZATION_r17.md's "SkewProbe receipts", and
+  * `graft.Probe` prints max_task for any registered query).
   */
 object SaltedAgg {
 

@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * partition count has to scale with the input.
   *
   * The deploy recipe, as code:
-  *  - `partitions = ceil(inputBytes × amplification / targetBytes)`,
-  *    where `amplification` covers parquet's encoding advantage over
+  *  - `partitions = ceil(inputBytes × Amplification / TargetBytes)`,
+  *    where `Amplification` covers parquet's encoding advantage over
   *    in-flight row data (dictionary/RLE-compressed columns fan out to
   *    ~4× their on-disk size as shuffle rows — conservative, and the
   *    penalty for overshooting is mild because AQE coalesces);
@@ -31,8 +31,8 @@ import org.apache.spark.sql.SparkSession
   *
   * On a real cluster `inputBytes` comes from the catalog/table stats;
   * here it is the recursive on-disk size of the benched directories.
-  * Bench, RunOne and the scale probes all route through [[configure]],
-  * so the harness exercises the exact sizing a deployment would use.
+  * Bench and Probe both route through [[configure]], so the harness
+  * exercises the exact sizing a deployment would use.
   */
 object Sizing {
 
@@ -40,22 +40,18 @@ object Sizing {
     * — comfortably inside an executor task's working memory, large
     * enough that task-launch overhead stays amortized.
     */
-  val DefaultTargetBytes: Long = 64L << 20
+  val TargetBytes: Long = 64L << 20
 
   /** On-disk parquet → in-flight row-bytes fan-out. */
-  val DefaultAmplification: Double = 4.0
+  val Amplification: Double = 4.0
 
   /** Partition count for `inputBytes` of on-disk input on `cores`
     * execution slots (pure function — see object doc for the recipe).
     */
-  def shufflePartitions(inputBytes: Long, cores: Int,
-      targetBytes: Long = DefaultTargetBytes,
-      amplification: Double = DefaultAmplification): Int = {
+  def shufflePartitions(inputBytes: Long, cores: Int): Int = {
     require(cores > 0, "cores must be positive")
-    require(targetBytes > 0, "targetBytes must be positive")
-    require(amplification > 0, "amplification must be positive")
     val needed =
-      math.ceil(math.max(0L, inputBytes) * amplification / targetBytes).toLong
+      math.ceil(math.max(0L, inputBytes) * Amplification / TargetBytes).toLong
     val waves = math.max(1L, (needed + cores - 1) / cores)
     // scheduler sanity cap — far above any single-job need; at this
     // point the answer is more executors, not more partitions
@@ -77,11 +73,9 @@ object Sizing {
     * `initialPartitionNum` from the recursive size of `dirs`. Returns
     * the partition count chosen.
     */
-  def configure(spark: SparkSession, dirs: Seq[String],
-      targetBytes: Long = DefaultTargetBytes,
-      amplification: Double = DefaultAmplification): Int = {
+  def configure(spark: SparkSession, dirs: Seq[String]): Int = {
     val n = shufflePartitions(bytesUnder(spark, dirs),
-      spark.sparkContext.defaultParallelism, targetBytes, amplification)
+      spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
     spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n.toString)

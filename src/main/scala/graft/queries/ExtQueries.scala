@@ -2580,7 +2580,7 @@ object ExtQueries {
     // cell-restricted form survives: candidates come only from the
     // node's own k-means cell, so the pairwise stage is O(n·cell) with
     // the cell population held bounded by growing k with the corpus
-    // (the x58 adjudication, measured flat in ScaleProbe).
+    // (the x58 adjudication, measured in PLANS.md's SCALE-SF10 addenda).
     //
     // Determinism: KMeansLite's bit-exact quantized fit (driver state
     // k·d doubles); distances are the zip_with left-fold both engines

@@ -6,7 +6,7 @@ import graft.ops.Sizing
 
 /** The partitions-∝-data deploy recipe (round-13 verdict #6): pure
   * arithmetic pinned on its boundaries, plus the session wiring that
-  * Bench/RunOne/Sf10Probe route through.
+  * Bench/Probe route through.
   */
 class SizingSpec extends AnyFunSuite {
 
@@ -29,14 +29,6 @@ class SizingSpec extends AnyFunSuite {
     val atBoundary = Sizing.shufflePartitions(16L << 30, 32)
     val pastBoundary = Sizing.shufflePartitions((16L << 30) + (1L << 30), 32)
     assert(pastBoundary > atBoundary && pastBoundary % 32 === 0)
-  }
-
-  test("amplification and target are levers, monotone in the right direction") {
-    val base = Sizing.shufflePartitions(16L << 30, 32)
-    assert(Sizing.shufflePartitions(16L << 30, 32, amplification = 16.0) ===
-      4 * base)
-    assert(Sizing.shufflePartitions(16L << 30, 32,
-      targetBytes = 128L << 20) === base / 2)
   }
 
   test("configure() sets both the static conf and the AQE initial count") {

@@ -9,8 +9,8 @@ object TestSpark {
       .master("local[4]")
       .appName("graft-test")
       // the builder-time injection path for the SQL function surface
-      // (ExtensionsSpec); Verify/Bench sessions use the post-hoc
-      // GraftFunctions.ensureRegistered path instead
+      // (ExtensionsSpec), the same one LocalSession gives the harness
+      // mains
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
