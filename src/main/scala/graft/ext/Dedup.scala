@@ -368,11 +368,12 @@ object Dedup {
     // boilerplate shingle — df far above ubiquityCap — a single-task
     // sort+buffer hot key at scale, the r16 ADVICE finding). The
     // partial HashAggregate bounds the hot shingle's shuffle traffic
-    // to one row per map task; the vocabulary-sized df table
-    // broadcasts back at bench scale and AQE skew-splits the shuffle
-    // attach beyond it (SaltedAgg docs). Shingles are distinct per
-    // doc, so the attached count IS the document frequency, exactly
-    // as before.
+    // to one row per map task; the df table re-attaches through one
+    // (key, salt) exchange and a shuffled-hash join, never a
+    // broadcast, so a hot shingle's probe rows stay split over its
+    // salt buckets (SaltedAgg docs; SaltedAggSpec pins the plan).
+    // Shingles are distinct per doc, so the attached count IS the
+    // document frequency, exactly as before.
     val expanded = SaltedAgg.attach(ex, "shh", Seq(col("id")),
         Seq(count(lit(1)).as("p_df")), Seq(sum(col("p_df")) -> "df"))
       .withColumn("w", idfWeight(col("df"), ubiquityCap))

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * row per (input-partition × day), not per input row. The `scope` filter
   * lands on the partition column of the raw table and prunes to one day's
   * files before any scan. The trailing global sort is on the already tiny
-  * one-row-per-day aggregate — harmless at any scale.
+  * one-row-per-day aggregate; table writers skip it ([[perDay]]).
   */
 object DailyRollup {
 
@@ -92,9 +92,15 @@ object DailyRollup {
 
   def rollup(hourly: DataFrame, scope: Option[Date] = None): DataFrame = {
     val scoped = scope.fold(hourly)(d => hourly.filter(col("dt") === lit(d)))
-    finish(scoped.groupBy(col("dt")).agg(aggExprs.head, aggExprs.tail: _*))
-      .orderBy(col("dt"))
+    perDay(scoped).orderBy(col("dt"))
   }
+
+  /** The rollup without its `ORDER BY dt`, for writers that partition by
+    * `dt`: each day lands in its own directory, so a global sort would
+    * only add a range-partitioning job before the write.
+    */
+  private[ops] def perDay(hourly: DataFrame): DataFrame =
+    finish(hourly.groupBy(col("dt")).agg(aggExprs.head, aggExprs.tail: _*))
 
   /** Streaming (incremental) form of the same rollup — §2h beyond the
     * reference: instead of re-materializing the day per trigger (the

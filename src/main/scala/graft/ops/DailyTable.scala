@@ -19,16 +19,21 @@ import org.apache.spark.sql.functions._
   * Spark mapping: parquet partitioned by (month_part, dt) — month_part
   * preserves the reference's month-granular pruning contract for
   * readers, and the dt sub-partition makes the upsert a *write-only*
-  * dynamic partition overwrite of exactly one day's directory:
+  * dynamic partition overwrite of exactly the affected days' directories.
+  * The upsert takes every day a micro-batch touched (today plus any late
+  * readings for earlier days) and replaces them in ONE pruned rollup and
+  * ONE write under one lock, not one job chain per day:
   *  - no read-modify-write: sibling days live in sibling directories
   *    that the overwrite never touches, so there is nothing to carry
   *    over (round 1 read siblings through `localCheckpoint`, which
   *    loses data if an executor dies mid-write — VERDICT.md #3);
   *  - no session-global config: `partitionOverwriteMode` is set
   *    per-write on the DataFrameWriter, not on the SparkConf;
-  *  - at scale the upsert cost is one day's rows regardless of table
-  *    size, and replaying it converges (no WRITE_APPEND double-count,
-  *    the reference bug of Load-gcs-to-bq/main.py:77).
+  *  - at scale the upsert cost is the affected days' rows regardless
+  *    of table size, and replaying it converges (no WRITE_APPEND
+  *    double-count, the reference bug of Load-gcs-to-bq/main.py:77);
+  *  - no global sort: every write goes through [[DailyRollup.perDay]],
+  *    since each (month_part, dt) directory holds one row.
   *
   * Semantics note: the reference's delete-then-insert would *remove* the
   * day when today's source is empty; dynamic overwrite with an empty
@@ -64,19 +69,27 @@ object DailyTable {
 
   /** Full rebuild (sp_create analogue): static overwrite of the table. */
   def bootstrap(hourly: DataFrame, path: String): Unit =
-    write(DailyRollup.rollup(hourly), path, dynamic = false)
+    write(DailyRollup.perDay(hourly), path, dynamic = false)
 
-  /** One-day delete-then-insert upsert (sp_update analogue): dynamic
-    * partition overwrite that replaces exactly the (month, day)
-    * directory the fresh rollup lands in. Idempotent — re-running for
-    * the same `asOf` rewrites the same partition with the same rows.
+  /** Delete-then-insert upsert of `days` (sp_update analogue, widened
+    * from the reference's one current day to every day a batch
+    * touched): one rollup over `dt IN (days)` — pruned to those days'
+    * raw partitions — and one dynamic partition overwrite that replaces
+    * exactly the (month, day) directories it lands in. Idempotent —
+    * re-running for the same days rewrites the same partitions with
+    * the same rows.
     */
-  def upsert(hourly: DataFrame, path: String, asOf: Date): Unit =
-    write(DailyRollup.rollup(hourly, Some(asOf)), path, dynamic = true)
+  def upsert(hourly: DataFrame, path: String, days: Date*): Unit = {
+    require(days.nonEmpty, "upsert needs at least one day")
+    write(DailyRollup.perDay(hourly.filter(col("dt").isin(days: _*))),
+      path, dynamic = true)
+  }
 
-  /** The existence branch of Load-gcs-to-bq/main.py:87-91. */
-  def sync(spark: SparkSession, hourly: DataFrame, path: String, asOf: Date): Unit =
-    if (exists(spark, path)) upsert(hourly, path, asOf)
+  /** The existence branch of Load-gcs-to-bq/main.py:87-91: upsert
+    * `days` into an existing table, or build it from the full history.
+    */
+  def sync(spark: SparkSession, hourly: DataFrame, path: String, days: Date*): Unit =
+    if (exists(spark, path)) upsert(hourly, path, days: _*)
     else bootstrap(hourly, path)
 
   /** Backfill a date RANGE (inclusive) — the repair operation the
@@ -93,7 +106,7 @@ object DailyTable {
     */
   def backfill(hourly: DataFrame, path: String, from: Date, to: Date): Unit = {
     require(!to.before(from), s"backfill range is empty: $from..$to")
-    write(DailyRollup.rollup(
+    write(DailyRollup.perDay(
         hourly.filter(col("dt") >= lit(from) && col("dt") <= lit(to))),
       path, dynamic = true)
   }

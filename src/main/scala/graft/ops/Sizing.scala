@@ -33,6 +33,10 @@ import org.apache.spark.sql.SparkSession
   * here it is the recursive on-disk size of the benched directories.
   * Bench and Probe both route through [[configure]], so the harness
   * exercises the exact sizing a deployment would use.
+  *
+  * Streaming ingest sizes each micro-batch with the same bytes rule,
+  * [[partitionsFor]], without the core floor: a trickle batch of a few
+  * KB belongs in one task, not one task per landing file.
   */
 object Sizing {
 
@@ -45,17 +49,32 @@ object Sizing {
   /** On-disk parquet → in-flight row-bytes fan-out. */
   val Amplification: Double = 4.0
 
+  /** Scheduler sanity cap — far above any single-job need; at this
+    * point the answer is more executors, not more partitions.
+    */
+  private val MaxPartitions: Long = 1L << 20
+
+  /** Partitions that hold `bytes` of input at [[TargetBytes]] each after
+    * [[Amplification]]: `ceil(bytes × Amplification / TargetBytes)`, at
+    * least 1 and at most the scheduler cap. Unknown plan statistics
+    * report a huge size (`spark.sql.defaultSizeInBytes`), which lands on
+    * the cap — so a caller that never raises a partition count leaves
+    * such a frame as it is.
+    */
+  def partitionsFor(bytes: BigInt): Int = {
+    val b = bytes.max(0).min(Long.MaxValue).toLong
+    val needed = math.ceil(b * Amplification / TargetBytes).toLong
+    math.min(math.max(1L, needed), MaxPartitions).toInt
+  }
+
   /** Partition count for `inputBytes` of on-disk input on `cores`
-    * execution slots (pure function — see object doc for the recipe).
+    * execution slots: [[partitionsFor]] rounded up to whole waves
+    * (pure function — see object doc for the recipe).
     */
   def shufflePartitions(inputBytes: Long, cores: Int): Int = {
     require(cores > 0, "cores must be positive")
-    val needed =
-      math.ceil(math.max(0L, inputBytes) * Amplification / TargetBytes).toLong
-    val waves = math.max(1L, (needed + cores - 1) / cores)
-    // scheduler sanity cap — far above any single-job need; at this
-    // point the answer is more executors, not more partitions
-    math.min(waves * cores, 1L << 20).toInt
+    val waves = (partitionsFor(inputBytes) + cores - 1L) / cores
+    math.min(waves * cores, MaxPartitions).toInt
   }
 
   /** Recursive on-disk size of `dirs` (each a file or directory). */

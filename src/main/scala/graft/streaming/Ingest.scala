@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.ops.{DailyTable, LogEvent, LogEvents}
+import graft.ops.{DailyTable, LogEvent, LogEvents, Sizing}
 import graft.schema.WeatherSchema
 
 /** E1 — the reference's flagship event-driven path (SURVEY.md §3),
@@ -18,8 +18,9 @@ import graft.schema.WeatherSchema
   *                                           NDJSON file = one input
   * BQ load job, WRITE_APPEND (K2,         →  foreachBatch: append batch
   *   main.py:74-84)                          to dt-partitioned raw parquet
-  * CALL sp_create / sp_update (D2/D3,     →  DailyTable.sync per affected
-  *   main.py:87-92)                          day, AFTER the append lands
+  * CALL sp_create / sp_update (D2/D3,     →  one DailyTable.sync over
+  *   main.py:87-92)                          every affected day, AFTER
+  *                                           the append lands
   * }}}
   *
   * Two reference bugs intentionally not reproduced (SURVEY.md §2 list):
@@ -30,11 +31,16 @@ import graft.schema.WeatherSchema
   *    checkpoint processes each landing file exactly once, so re-running
   *    the stream re-ingests nothing.
   *
-  * Scale posture: the raw table is written `partitionBy(dt)`, so (a) the
-  * per-day rollup scan prunes to one day's files, (b) retention (K5) is
-  * a pure partition drop, and (c) the only driver-side collect is the
-  * distinct `dt` list of one micro-batch — bounded by days-per-batch,
-  * independent of batch row count.
+  * Scale posture: each micro-batch is one sized pass. (a) Its partition
+  * count follows its bytes ([[graft.ops.Sizing.partitionsFor]]), not the
+  * file source's one partition per landing file, so a trickle batch of
+  * a few dozen one-line blobs is one task and one raw file per day, not
+  * one of each per blob. (b) The raw table is written `partitionBy(dt)`,
+  * so the rollup scan prunes to the batch's days and retention (K5) is a
+  * pure partition drop. (c) The only driver-side collect is one
+  * aggregate row holding the malformed count and the batch's sorted
+  * `dt` set — bounded by days-per-batch, independent of row count.
+  * (d) The daily table is written once per batch, for all its days.
   */
 object Ingest {
 
@@ -75,8 +81,9 @@ object Ingest {
         message_type = messageType, message = message)).toDS(), root)
     }
 
-  /** One micro-batch: K2 append, then D2/D3 transform per affected day —
-    * sequential within the batch (the ordering CF#2 gets wrong).
+  /** One micro-batch: K2 append, then one D2/D3 transform over every
+    * affected day — sequential within the batch (the ordering CF#2 gets
+    * wrong).
     *
     * The "append" is a dynamic overwrite of the batch's own
     * (dt, ingest_batch=<id>) partitions: a retried batch (crash after
@@ -89,35 +96,28 @@ object Ingest {
   private[graft] def ingestBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long, rawPath: String,
       dailyPath: String, logRoot: Option[String] = None): Unit = {
-    batch.persist()
+    val sized = sizedByBytes(batch)
+    sized.persist()
     try {
       // Malformed landing lines parse to all-null rows under the explicit
       // schema (PERMISSIVE mode); a null dt would land in the Hive
       // default partition and silently poison the rollup's null group —
-      // quarantine them to a count instead of ingesting.
-      val good = batch.filter(col("dt").isNotNull)
-      // One conditional aggregate (count(col) skips nulls) instead of
-      // batch.count() - good.count(): same number, one job launch per
-      // micro-batch rather than two over the cached batch.
-      val counts = batch
-        .agg(count(lit(1)).as("total"), count(col("dt")).as("with_dt"))
-        .head()
-      val malformed = counts.getLong(0) - counts.getLong(1)
-      good.withColumn("ingest_batch", lit(batchId))
+      // quarantine them to a count instead of ingesting. One aggregate
+      // (count(col) and collect_set skip nulls) yields both the
+      // malformed count and the batch's days in a single job.
+      val stats = sized.agg(count(lit(1)), count(col("dt")),
+        sort_array(collect_set(col("dt")))).head()
+      val malformed = stats.getLong(0) - stats.getLong(1)
+      val days = stats.getSeq[Date](2)
+      sized.filter(col("dt").isNotNull)
+        .withColumn("ingest_batch", lit(batchId))
         .write.partitionBy("dt", "ingest_batch")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(rawPath)
-      val days = good.select(col("dt")).distinct().collect()
-        .map(_.getAs[Date]("dt")).sorted
-      if (days.nonEmpty) {
-        // dt is now a partition column of the raw store; per-day scope
-        // filters in DailyRollup prune to one day's directory.
-        val raw = spark.read.parquet(rawPath)
-        if (!DailyTable.exists(spark, dailyPath))
-          DailyTable.bootstrap(raw, dailyPath) // covers every day at once
-        else
-          days.foreach(d => DailyTable.upsert(raw, dailyPath, d))
-      }
+      // dt is a partition column of the raw store; the upsert's
+      // dt IN (days) filter prunes to those days' directories.
+      if (days.nonEmpty)
+        DailyTable.sync(spark, spark.read.parquet(rawPath), dailyPath, days: _*)
       publishLog(spark, logRoot, "success",
         s"batch $batchId loaded, days=${days.mkString(",")}, malformed=$malformed")
     } catch {
@@ -125,6 +125,17 @@ object Ingest {
         publishLog(spark, logRoot, "error",
           s"batch $batchId failed: ${e.getMessage}")
         throw e
-    } finally batch.unpersist()
+    } finally sized.unpersist()
+  }
+
+  /** The batch coalesced to the partitions its bytes need. The file
+    * source hands foreachBatch one partition per landing file; its plan
+    * statistics carry the files' total size. Never raises the count, so
+    * a frame with unknown statistics (reported as a huge size) is left
+    * as it is.
+    */
+  private def sizedByBytes(batch: DataFrame): DataFrame = {
+    val n = Sizing.partitionsFor(batch.queryExecution.optimizedPlan.stats.sizeInBytes)
+    if (n < batch.rdd.getNumPartitions) batch.coalesce(n) else batch
   }
 }

@@ -67,6 +67,24 @@ class DailyTableSpec extends AnyFunSuite {
       ("2022-09-01", 9, 17.0))) // other month: untouched
   }
 
+  test("upsert rewrites every given day in one call; other days survive") {
+    val path = tmp()
+    DailyTable.bootstrap(hourly(augRows: _*), path)
+    val updated = Seq(
+      hourlyRow("2022-08-29", "12:00:00", 290.15),
+      hourlyRow("2022-08-30", "10:00:00", 999.15), // 08-30 is not named
+      hourlyRow("2022-09-01", "12:00:00", 310.15))
+    DailyTable.upsert(hourly(updated: _*), path,
+      Date.valueOf("2022-08-29"), Date.valueOf("2022-09-01"))
+    assert(snapshot(path) == Set(
+      ("2022-08-29", 8, 17.0),
+      ("2022-08-30", 8, 7.0), // untouched
+      ("2022-09-01", 9, 37.0)))
+    intercept[IllegalArgumentException] {
+      DailyTable.upsert(hourly(updated: _*), path)
+    }
+  }
+
   test("upsert is idempotent: re-running the same day converges") {
     val path = tmp()
     DailyTable.bootstrap(hourly(augRows: _*), path)

@@ -120,18 +120,80 @@ class IngestSpec extends AnyFunSuite {
   test("malformed landing lines are quarantined, not ingested as null days") {
     val root = Files.createTempDirectory("graft-ingest-bad")
     val landing = Files.createDirectories(root.resolve("landing"))
-    writeLanding(landing, "blob.json", Seq(
+    // malformed lines spread over several blobs of one micro-batch: the
+    // logged count must be exact after the batch is coalesced
+    writeLanding(landing, "blob-1.json", Seq(
       ndjson("2022-08-29", "10:00:00", 300.15),
       """{"this is": not even json"""))
+    writeLanding(landing, "blob-2.json", Seq(
+      """{"truncated": """, ndjson("2022-08-30", "10:00:00", 290.15)))
+    writeLanding(landing, "blob-3.json", Seq("not json at all"))
     Ingest.runOnce(spark, landing.toString, root.resolve("raw").toString,
       root.resolve("daily").toString, root.resolve("ckpt").toString,
       Some(root.resolve("logs").toString))
     val raw = spark.read.parquet(root.resolve("raw").toString)
-    assert(raw.count() == 1) // only the good row
+    assert(raw.count() == 2) // only the good rows
     assert(raw.filter(col("dt").isNull).isEmpty)
-    val msg = graft.ops.LogEvents.read(spark, root.resolve("logs").toString)
-      .select("message").collect().head.getString(0)
-    assert(msg.contains("malformed=1"))
+    val msgs = graft.ops.LogEvents.read(spark, root.resolve("logs").toString)
+      .select("message").collect().map(_.getString(0)).toSeq
+    assert(msgs == Seq("batch 0 loaded, days=2022-08-29,2022-08-30, malformed=3"))
+  }
+
+  private def filesUnder(dir: String): Set[String] =
+    Files.walk(Paths.get(dir)).toArray.map(_.asInstanceOf[Path])
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+      .map(p => Paths.get(dir).relativize(p).toString).toSet
+
+  test("a micro-batch of many landing files writes one raw file per day") {
+    val root = Files.createTempDirectory("graft-ingest-sized")
+    val landing = Files.createDirectories(root.resolve("landing"))
+    val raw = root.resolve("raw").toString
+    val daily = root.resolve("daily").toString
+    (0 until 10).foreach(h => writeLanding(landing, f"blob-$h%02d.json",
+      Seq(ndjson("2022-08-29", f"$h%02d:00:00", 290.15 + h))))
+    Ingest.runOnce(spark, landing.toString, raw, daily,
+      root.resolve("ckpt").toString)
+    // one micro-batch of ten one-line blobs: one task, so one file
+    assert(filesUnder(raw).map(_.split('/').init.mkString("/")).toSeq ==
+      Seq("dt=2022-08-29/ingest_batch=0"))
+    assert(filesUnder(raw).size == 1)
+    assert(filesUnder(daily).size == 1)
+    assert(spark.read.parquet(raw).count() == 10)
+    assert(DailyTable.read(spark, daily).select("avg_temp").as[Double]
+      .collect().toSeq == Seq(21.5)) // avg(290.15..299.15) - 273.15
+  }
+
+  test("a late reading re-rolls its earlier day with today's; other days untouched") {
+    val root = Files.createTempDirectory("graft-ingest-late")
+    val landing = Files.createDirectories(root.resolve("landing"))
+    val raw = root.resolve("raw").toString
+    val daily = root.resolve("daily").toString
+    val ckpt = root.resolve("ckpt").toString
+    def avgByDay(): Map[String, Double] = DailyTable.read(spark, daily)
+      .select(col("dt").cast("string"), col("avg_temp"))
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
+
+    Seq("2022-08-29" -> 300.15, "2022-08-30" -> 280.15, "2022-08-31" -> 290.15)
+      .foreach { case (d, t) => writeLanding(landing, s"$d.json",
+        Seq(ndjson(d, "10:00:00", t))) }
+    Ingest.runOnce(spark, landing.toString, raw, daily, ckpt)
+    assert(avgByDay() == Map(
+      "2022-08-29" -> 27.0, "2022-08-30" -> 7.0, "2022-08-31" -> 17.0))
+    val untouched = filesUnder(daily).filter(_.contains("dt=2022-08-30"))
+    assert(untouched.size == 1)
+
+    // today's reading plus one two days late, in one micro-batch
+    writeLanding(landing, "2022-08-31-late.json", Seq(
+      ndjson("2022-08-31", "11:00:00", 294.15),
+      ndjson("2022-08-29", "11:00:00", 304.15)))
+    Ingest.runOnce(spark, landing.toString, raw, daily, ckpt)
+    assert(avgByDay() == Map(
+      "2022-08-29" -> 29.0, // avg(300.15, 304.15) - 273.15
+      "2022-08-30" -> 7.0,
+      "2022-08-31" -> 19.0)) // avg(290.15, 294.15) - 273.15
+    // 08-30's daily file is the very file the first batch wrote
+    assert(filesUnder(daily).filter(_.contains("dt=2022-08-30")) == untouched)
+    assert(filesUnder(daily).size == 3)
   }
 
   test("a failing batch publishes an error envelope and rethrows") {
@@ -154,17 +216,19 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("ingest keeps per-day scope pruned to the day's partition") {
-    // The upsert's rollup filters dt == asOf over the dt-partitioned raw
-    // store; the plan must show partition pruning, not a full scan.
+    // The upsert's rollup filters dt IN (days) over the dt-partitioned
+    // raw store; the plan must show partition pruning, not a full scan.
     val root = Files.createTempDirectory("graft-ingest-prune")
     val raw = root.resolve("raw").toString
-    val df = spark.range(2).select(
+    val df = spark.range(3).select(
       (col("id") + 1).cast("double").as("value"),
-      to_date(lit("2022-08-29")).as("dt"))
+      date_add(to_date(lit("2022-08-29")), col("id").cast("int")).as("dt"))
     df.write.partitionBy("dt").parquet(raw)
-    val scan = spark.read.parquet(raw).filter(col("dt") === lit(Date.valueOf("2022-08-29")))
+    val days = Seq(Date.valueOf("2022-08-29"), Date.valueOf("2022-08-31"))
+    val scan = spark.read.parquet(raw).filter(col("dt").isin(days: _*))
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       plan.contains("dt") && !plan.toLowerCase.contains("partitionfilters: []"))
+    assert(scan.count() == 2)
   }
 }

@@ -43,4 +43,11 @@ class KMeansSlicedSpec extends AnyFunSuite {
     val solo = KMeansLite.fitQuantized(one, "vec_id", "v", 8, iters = 1)
     assert(fused === Seq(solo))
   }
+
+  test("an empty fit list is rejected up front") {
+    val e = intercept[IllegalArgumentException] {
+      KMeansLite.fitQuantizedSliced(vecs(4), "vec_id", "v", Nil, iters = 1)
+    }
+    assert(e.getMessage.contains("at least one fit"))
+  }
 }
